@@ -139,6 +139,13 @@ def run_incremental_available_now(
     def fan_out(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.cache()
         try:
+            # An Available-Now drain ends with a zero-row watermark batch;
+            # merging it would still read, anti-join, checkpoint and
+            # rewrite both tables. count(), not isEmpty(): a full action
+            # runs every partition of the stateful dedup, so each one
+            # commits its state version before the batch is skipped.
+            if batch_df.count() == 0:
+                return
             merge_write(
                 build_users(batch_df),
                 os.path.join(output_dir, "users"),
