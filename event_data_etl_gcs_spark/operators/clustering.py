@@ -29,6 +29,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .pairs import (
+    collapse_to_reps,
+    cosine_sql,
+    cosine_verify,
+    expand_members,
+    self_cosine,
+)
+
 K_CLUSTERS = 8
 
 
@@ -265,13 +273,8 @@ def _semdedup_members(
         .localCheckpoint(eager=False)
     )
     if collapse_identical:
-        mem = base.withColumn(
-            "rep_id", F.min("id").over(Window.partitionBy("v"))
-        )
-        mem_ids = _track_ann_cache(mem.select("id", "rep_id").cache())
-        reps = mem.filter(F.col("id") == F.col("rep_id")).select(
-            "id", "v", "nrm"
-        )
+        reps, mem_ids = collapse_to_reps(base, "v")
+        _track_ann_cache(mem_ids)
     else:
         mem_ids = None
         reps = base
@@ -327,7 +330,7 @@ def semdedup_pairs(
 
     * Candidates are the SKINNY within-cluster self-join — (cluster_id,
       id) rows only; embeddings join back BY ID afterwards (broadcast
-      under JOINBACK_BROADCAST_MAX_ROWS), so float arrays never ride the
+      under the pairs.join_back size bound), so float arrays never ride the
       cluster-join shuffle.
     * ``collapse_identical`` (default on): bit-identical vectors collapse
       to a min-id rep BEFORE the quadratic join — a 100x-replicated
@@ -428,9 +431,6 @@ def _semdedup_pairs_body(
     """Pair build over an already-constructed front end (so semdedup_keep
     can share one front end — and one build-cache generation — between
     the pair plan and the centroid-cosine plan)."""
-    from .graph import JOINBACK_BROADCAST_MAX_ROWS
-    from .similarity import dot_sql
-
     base, cent, reps, mem_ids, members, n_reps = front
     collapse_identical = mem_ids is not None
     _guard_cluster_size(members, max_cluster)
@@ -461,66 +461,22 @@ def _semdedup_pairs_body(
             )
         )
         cand = _cluster_local_candidate_pairs(mv, threshold - 1e-6)
-    bcast = n_reps <= JOINBACK_BROADCAST_MAX_ROWS
-    va = reps.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    vb = reps.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    rep_pairs = (
-        cand.join(F.broadcast(va) if bcast else va, "id_a")
-        .join(F.broadcast(vb) if bcast else vb, "id_b")
-        .select(
-            "cluster_id",
-            "id_a",
-            "id_b",
-            (
-                F.expr(dot_sql("va", "vb")) / (F.col("na") * F.col("nb"))
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
+    rep_pairs = cosine_verify(
+        cand, reps, n_reps, keep=("cluster_id",), threshold=threshold
     )
     if not collapse_identical:
         return rep_pairs
-    # Intra-group expansion: member pairs of an identical-vector group
-    # carry the rep's SELF-cosine and the rep's cluster.
-    self_cos = reps.select(
-        F.col("id").alias("rep_id"),
-        (F.expr(dot_sql("v", "v")) / (F.col("nrm") * F.col("nrm"))).alias(
-            "cos_sim"
+    # Member pairs of an identical-vector group carry the rep's
+    # self-cosine and the rep's cluster.
+    intra, cross = expand_members(
+        rep_pairs,
+        mem_ids,
+        "cos_sim",
+        rep_joins=(
+            self_cosine(reps, threshold),
+            members.select(F.col("id").alias("rep_id"), "cluster_id"),
         ),
-    ).filter(F.col("cos_sim") >= threshold)
-    rep_cluster = members.select(
-        F.col("id").alias("rep_id"), "cluster_id"
-    )
-    x, y = mem_ids.alias("x"), mem_ids.alias("y")
-    intra = (
-        x.join(
-            y,
-            (F.col("x.rep_id") == F.col("y.rep_id"))
-            & (F.col("x.id") < F.col("y.id")),
-        )
-        .join(self_cos.alias("s"), F.col("x.rep_id") == F.col("s.rep_id"))
-        .join(rep_cluster.alias("rc"), F.col("x.rep_id") == F.col("rc.rep_id"))
-        .select(
-            "cluster_id",
-            F.col("x.id").alias("id_a"),
-            F.col("y.id").alias("id_b"),
-            "cos_sim",
-        )
-    )
-    ma = mem_ids.select(F.col("rep_id").alias("id_a"), F.col("id").alias("m_a"))
-    mb = mem_ids.select(F.col("rep_id").alias("id_b"), F.col("id").alias("m_b"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            "cluster_id",
-            F.least("m_a", "m_b").alias("id_a"),
-            F.greatest("m_a", "m_b").alias("id_b"),
-            "cos_sim",
-        )
+        keep=("cluster_id",),
     )
     return intra.unionByName(cross)
 
@@ -632,8 +588,6 @@ def _semdedup_pruned_scale(
         — which is precisely what the witness scan computes.
     Pinned bit-identical to the fold path by tests/test_semdedup.py.
     """
-    from .similarity import dot_sql
-
     base, cent, reps, mem_ids, members, n_reps = front
     _guard_cluster_size(members, max_cluster)
     if threshold >= 1 - 1e-6:
@@ -669,19 +623,9 @@ def _semdedup_pruned_scale(
         (F.col("other") == -1) & (F.col("certain") == 1)
     ).select(F.col("id").alias("rep_id"))
     unc = ker.filter(F.col("other") >= 0).select("id", "other")
-    va = reps.select(F.col("id"), F.col("v").alias("va"), F.col("nrm").alias("na"))
-    vb = reps.select(
-        F.col("id").alias("other"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    confirmed = (
-        unc.join(va, "id")
-        .join(vb, "other")
-        .filter(
-            F.expr(dot_sql("va", "vb")) / (F.col("na") * F.col("nb"))
-            >= F.lit(threshold)
-        )
-        .select(F.col("id").alias("rep_id"))
-    )
+    confirmed = cosine_verify(
+        unc, reps, ids=("id", "other"), threshold=threshold
+    ).select(F.col("id").alias("rep_id"))
     rep_pruned = certain.unionByName(confirmed).distinct()
     if mem_ids is not None:
         mem = mem_ids.select("rep_id", "id")
@@ -725,8 +669,6 @@ def semdedup_keep(
     inherit it (equal v => equal cosine); the corpus never shuffles —
     the only join keys are ids and the k-row broadcast centroid table.
     """
-    from .similarity import dot_sql
-
     front = _semdedup_members(
         emb, k, id_col, vec_col, collapse_identical, n_iter=n_iter
     )
@@ -738,9 +680,7 @@ def semdedup_keep(
         .select(
             F.col("id").alias("rep_id"),
             "cluster_id",
-            (
-                F.expr(dot_sql("v", "cvec")) / (F.col("nrm") * F.col("cnrm"))
-            ).alias("centroid_cos"),
+            cosine_sql("v", "cvec", "nrm", "cnrm").alias("centroid_cos"),
         )
     )
     if collapse_identical:

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .pairs import band_join, collapse_to_reps, expand_members, join_back
 from .text import (
     HASH_P,
     duck_let,
@@ -147,56 +148,30 @@ def minhash_lsh_pairs(
         )
         return _lsh_pairs_from_sig(sig, threshold)
 
-    # Exact-dedup-first: one hash window on the text assigns each row its
-    # group's min-id representative (single shuffle, no join back).
-    from pyspark.sql import Window
-
-    mem = (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-        .withColumn("rep_id", F.min("id").over(Window.partitionBy("text")))
+    # Exact-dedup-first (pairs.collapse_to_reps). The (id, rep_id)
+    # member map stays an untracked cache: it is tiny (two longs a row).
+    reps, mem_ids = collapse_to_reps(
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")), "text"
     )
-    # (id, rep_id) barrier: consumed by the intra- and cross-group
-    # expansions below. Tiny (two longs per row).
-    mem_ids = mem.select("id", "rep_id").cache()
-    reps = mem.filter(F.col("id") == F.col("rep_id")).select("id", "text")
     sig = minhash_signatures(reps, "id", "text").filter(
         F.expr("size(sh_hashes) > 0")
     )
     rep_pairs = _lsh_pairs_from_sig(sig, threshold)
-
-    # Intra-group: every member pair of a duplicate group is jaccard 1.0 —
-    # but only for groups whose text actually has shingles (the no-shingle
-    # filter above must apply to members exactly as it does to reps).
-    shingled = sig.select(F.col("id").alias("rep_id"))
-    x, y = mem_ids.alias("x"), mem_ids.alias("y")
-    intra = (
-        x.join(y, (F.col("x.rep_id") == F.col("y.rep_id")) & (F.col("x.id") < F.col("y.id")))
-        .join(shingled.alias("s"), F.col("x.rep_id") == F.col("s.rep_id"))
-        .select(
-            F.col("x.id").alias("id_a"),
-            F.col("y.id").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    # Cross-group: jaccard(a, b) for identical-text members equals the
-    # rep-pair jaccard; expand each rep pair to the member cross product.
-    ma = mem_ids.select(F.col("rep_id").alias("id_a"), F.col("id").alias("m_a"))
-    mb = mem_ids.select(F.col("rep_id").alias("id_b"), F.col("id").alias("m_b"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("m_a", "m_b").alias("id_a"),
-            F.greatest("m_a", "m_b").alias("id_b"),
-            "jaccard",
-        )
+    # Intra-group pairs are jaccard 1.0 — but only for groups whose text
+    # has shingles (the no-shingle filter must apply to members exactly
+    # as it does to reps).
+    intra, cross = expand_members(
+        rep_pairs,
+        mem_ids,
+        "jaccard",
+        intra_value=F.lit(1.0),
+        rep_joins=(sig.select(F.col("id").alias("rep_id")),),
     )
     return intra.unionByName(cross)
 
 
-def _lsh_pairs_from_sig(sig: DataFrame, threshold: float) -> DataFrame:
-    """Banding + candidate join + exact Jaccard verify over a cached
-    (id, sh_hashes, mhs) signature frame."""
+def _minhash_bands(sig: DataFrame) -> DataFrame:
+    """(id, band_id, k0..) — one row per (doc, band) of a signature frame."""
     band_structs = [
         F.struct(
             F.lit(b).alias("band_id"),
@@ -204,23 +179,19 @@ def _lsh_pairs_from_sig(sig: DataFrame, threshold: float) -> DataFrame:
         )
         for b in range(N_BANDS)
     ]
-    bands = sig.select("id", F.explode(F.array(*band_structs)).alias("band")).select(
+    return sig.select("id", F.explode(F.array(*band_structs)).alias("band")).select(
         "id", "band.*"
     )
-    a, b = bands.alias("a"), bands.alias("b")
-    key_eq = (F.col("a.band_id") == F.col("b.band_id"))
-    for r in range(ROWS_PER_BAND):
-        key_eq = key_eq & (F.col(f"a.k{r}") == F.col(f"b.k{r}"))
-    cand = (
-        a.join(b, key_eq & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    ha = sig.select(F.col("id").alias("id_a"), F.col("sh_hashes").alias("ha"))
-    hb = sig.select(F.col("id").alias("id_b"), F.col("sh_hashes").alias("hb"))
+
+
+_BAND_KEYS = ["band_id", *[f"k{r}" for r in range(ROWS_PER_BAND)]]
+
+
+def _jaccard_verify(cand: DataFrame, sig: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard on the shingle-hash sets, joined back by id for the
+    candidate pairs only."""
     jac = (
-        cand.join(ha, "id_a")
-        .join(hb, "id_b")
+        join_back(cand, sig, {"sh_hashes": "h"})
         .withColumn("n_int", F.expr("size(array_intersect(ha, hb))"))
         .withColumn("n_uni", F.expr("size(array_union(ha, hb))"))
         .withColumn(
@@ -231,6 +202,13 @@ def _lsh_pairs_from_sig(sig: DataFrame, threshold: float) -> DataFrame:
         )
     )
     return jac.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+
+
+def _lsh_pairs_from_sig(sig: DataFrame, threshold: float) -> DataFrame:
+    """Banding + candidate join + exact Jaccard verify over a cached
+    (id, sh_hashes, mhs) signature frame."""
+    cand = band_join(_minhash_bands(sig), _BAND_KEYS).distinct()
+    return _jaccard_verify(cand, sig, threshold)
 
 
 def duck_minhash_lsh_ctes(
@@ -323,51 +301,10 @@ def minhash_incremental_pairs(
         F.expr("size(sh_hashes) > 0")
     )
     sig_all = existing_sig.select("id", "sh_hashes", "mhs").unionByName(sig_new)
-
-    def _bands(sig: DataFrame) -> DataFrame:
-        band_structs = [
-            F.struct(
-                F.lit(b).alias("band_id"),
-                *[
-                    F.col("mhs")[b * ROWS_PER_BAND + r].alias(f"k{r}")
-                    for r in range(ROWS_PER_BAND)
-                ],
-            )
-            for b in range(N_BANDS)
-        ]
-        return sig.select(
-            "id", F.explode(F.array(*band_structs)).alias("band")
-        ).select("id", "band.*")
-
-    a, b = _bands(sig_new).alias("a"), _bands(sig_all).alias("b")
-    key_eq = (F.col("a.band_id") == F.col("b.band_id"))
-    for r in range(ROWS_PER_BAND):
-        key_eq = key_eq & (F.col(f"a.k{r}") == F.col(f"b.k{r}"))
-    cand = (
-        a.join(b, key_eq & (F.col("a.id") != F.col("b.id")))
-        .select(
-            F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
-            F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"),
-        )
-        .distinct()
-    )
-    ha = sig_all.select(F.col("id").alias("id_a"), F.col("sh_hashes").alias("ha"))
-    hb = sig_all.select(F.col("id").alias("id_b"), F.col("sh_hashes").alias("hb"))
-    jac = (
-        cand.join(ha, "id_a")
-        .join(hb, "id_b")
-        .withColumn("n_int", F.expr("size(array_intersect(ha, hb))"))
-        .withColumn("n_uni", F.expr("size(array_union(ha, hb))"))
-        .withColumn(
-            "jaccard",
-            F.when(F.col("n_uni") == 0, F.lit(0.0)).otherwise(
-                F.col("n_int").cast("double") / F.col("n_uni")
-            ),
-        )
-    )
-    pairs = jac.filter(F.col("jaccard") >= threshold).select(
-        "id_a", "id_b", "jaccard"
-    )
+    cand = band_join(
+        _minhash_bands(sig_all), _BAND_KEYS, probe=_minhash_bands(sig_new)
+    ).distinct()
+    pairs = _jaccard_verify(cand, sig_all, threshold)
     return pairs, sig_new
 
 
@@ -499,7 +436,6 @@ def containment_pairs(
     same remedy (raise k / cap postings at a measured recall cost).
     """
     from .graph import _track_ann_cache
-    from pyspark.sql import Window
 
     sets = docs.select(
         F.col(id_col).alias("id"),
@@ -527,22 +463,43 @@ def containment_pairs(
         # containment is n/n = 1.0 exactly; cross-group pairs inherit
         # the rep pair's division verbatim). Output identical to the
         # uncollapsed build (pytest-pinned).
-        mem = sets.withColumn(
-            "rep_id", F.min("id").over(Window.partitionBy(F.sort_array("s")))
-        )
-        mem_ids = _track_ann_cache(mem.select("id", "rep_id").cache())
-        reps = mem.filter(F.col("id") == F.col("rep_id")).select("id", "s")
+        reps, mem_ids = collapse_to_reps(sets, F.sort_array("s"))
+        _track_ann_cache(mem_ids)
     else:
         reps = sets
 
     post = reps.select("id", F.explode("s").alias("h"))
+    cand = _prefix_probe(_probe_prefix(post, threshold_num, threshold_den), post)
+    thr = threshold_num / threshold_den
+    rep_pairs = _containment_verify(cand.distinct(), reps, thr)
+    if not collapse_identical:
+        return _ret(rep_pairs)
+
+    # Ordered pairs: containment is asymmetric. Within a group
+    # |S∩S| / |S| = 1.0 exactly (n/n is an exact IEEE division for any
+    # n), the same double the uncollapsed verify computes — qualifying
+    # whenever the threshold is <= 1.
+    intra, cross = expand_members(
+        rep_pairs, mem_ids, "containment", intra_value=F.lit(1.0), ordered=True
+    )
+    if thr > 1.0:
+        return _ret(cross)
+    return _ret(cross.unionByName(intra))
+
+
+def _probe_prefix(post: DataFrame, threshold_num: int, threshold_den: int) -> DataFrame:
+    """(id, h): each doc's first ``n - ceil(t * n) + 1`` shingles in
+    ascending (doc-freq within ``post``, h) order — its prefix-filter
+    probe keys. The required overlap ceil(num * n / den) is exact
+    integer arithmetic."""
+    from pyspark.sql import Window
+
     freq = post.groupBy("h").agg(F.count("*").alias("df"))
     w = Window.partitionBy("id").orderBy("df", "h")
-    prefix = (
+    return (
         post.join(freq, "h")
         .withColumn("n_a", F.count("*").over(Window.partitionBy("id")))
         .withColumn("rn", F.row_number().over(w))
-        # required overlap = ceil(num * n / den), exactly, in integers
         .filter(
             F.col("rn")
             <= F.expr(
@@ -552,19 +509,24 @@ def containment_pairs(
         )
         .select("id", "h")
     )
-    cand = (
+
+
+def _prefix_probe(prefix: DataFrame, post: DataFrame) -> DataFrame:
+    """Candidate (id_a, id_b): probe-prefix rows of a joined to posting
+    rows of b on the shingle hash (not deduplicated)."""
+    return (
         prefix.alias("a")
         .join(post.alias("b"), "h")
         .filter(F.col("a.id") != F.col("b.id"))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
     )
-    va = reps.select(F.col("id").alias("id_a"), F.col("s").alias("sa"))
-    vb = reps.select(F.col("id").alias("id_b"), F.col("s").alias("sb"))
-    thr = threshold_num / threshold_den
-    rep_pairs = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
+
+
+def _containment_verify(cand: DataFrame, sets: DataFrame, thr: float) -> DataFrame:
+    """Exact containment |S_a ∩ S_b| / |S_a| >= thr over candidates,
+    shingle sets joined back by id."""
+    return (
+        join_back(cand, sets, {"s": "s"})
         .select(
             "id_a",
             "id_b",
@@ -575,42 +537,6 @@ def containment_pairs(
         )
         .filter(F.col("containment") >= F.lit(thr))
     )
-    if not collapse_identical:
-        return _ret(rep_pairs)
-
-    # Cross-group expansion: member sets equal their rep's set, so the
-    # rep pair's containment value applies verbatim to every member
-    # combination.
-    ma = mem_ids.select(F.col("rep_id").alias("id_a"), F.col("id").alias("m_a"))
-    mb = mem_ids.select(F.col("rep_id").alias("id_b"), F.col("id").alias("m_b"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.col("m_a").alias("id_a"),
-            F.col("m_b").alias("id_b"),
-            "containment",
-        )
-    )
-    if thr > 1.0:
-        return _ret(cross)
-    # Within-group pairs: |S∩S| / |S| = 1.0 exactly (n/n is an exact
-    # IEEE division for any n), the same double the uncollapsed verify
-    # computes — qualifying whenever the threshold is <= 1.
-    x, y = mem_ids.alias("x"), mem_ids.alias("y")
-    intra = (
-        x.join(
-            y,
-            (F.col("x.rep_id") == F.col("y.rep_id"))
-            & (F.col("x.id") != F.col("y.id")),
-        )
-        .select(
-            F.col("x.id").alias("id_a"),
-            F.col("y.id").alias("id_b"),
-            F.lit(1.0).alias("containment"),
-        )
-    )
-    return _ret(cross.unionByName(intra))
 
 
 def containment_keep(
@@ -696,8 +622,6 @@ def containment_incremental_pairs(
     Returns ``(pairs, new_sets, new_prefix)``; the caller appends the
     last two to the persisted state. Ids must be globally unique.
     """
-    from pyspark.sql import Window
-
     new_sets = new_docs.select(
         F.col(id_col).alias("id"),
         F.expr(shingle_hash_set_sql(text_col)).alias("s"),
@@ -709,55 +633,17 @@ def containment_incremental_pairs(
     new_post = new_sets.select("id", F.explode("s").alias("h"))
     # Prefix ordering from batch-local doc-freq (+ h tie-break): any
     # ordering is exact; batch-local df is the cheapest useful bias
-    # (no history scan). The prefix length bound uses exact integer
-    # arithmetic — see containment_pairs.
-    freq = new_post.groupBy("h").agg(F.count("*").alias("df"))
-    w = Window.partitionBy("id").orderBy("df", "h")
-    new_prefix = (
-        new_post.join(freq, "h")
-        .withColumn("n_a", F.count("*").over(Window.partitionBy("id")))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(
-            F.col("rn")
-            <= F.expr(
-                f"n_a - (({threshold_num} * n_a + {threshold_den} - 1) "
-                f"DIV {threshold_den}) + 1"
-            )
-        )
-        .select("id", "h")
-    )
+    # (no history scan).
+    new_prefix = _probe_prefix(new_post, threshold_num, threshold_den)
 
     exist_post = existing_sets.select("id", F.explode("s").alias("h"))
     post_all = exist_post.unionByName(new_post)
-    cand_a = (
-        new_prefix.alias("a")
-        .join(post_all.alias("b"), "h")
-        .filter(F.col("a.id") != F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+    cand = (
+        _prefix_probe(new_prefix, post_all)
+        .unionByName(_prefix_probe(existing_prefix, new_post))
+        .distinct()
     )
-    cand_b = (
-        existing_prefix.alias("a")
-        .join(new_post.alias("b"), "h")
-        .filter(F.col("a.id") != F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
-    cand = cand_a.unionByName(cand_b).distinct()
-
-    all_sets = existing_sets.unionByName(new_sets)
-    va = all_sets.select(F.col("id").alias("id_a"), F.col("s").alias("sa"))
-    vb = all_sets.select(F.col("id").alias("id_b"), F.col("s").alias("sb"))
-    thr = threshold_num / threshold_den
-    pairs = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.expr("size(array_intersect(sa, sb))").cast("double")
-                / F.expr("size(sa)")
-            ).alias("containment"),
-        )
-        .filter(F.col("containment") >= F.lit(thr))
+    pairs = _containment_verify(
+        cand, existing_sets.unionByName(new_sets), threshold_num / threshold_den
     )
     return pairs, new_sets, new_prefix

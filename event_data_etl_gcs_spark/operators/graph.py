@@ -19,6 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .pairs import band_join, cosine_verify
+from .similarity import hyperplane_sign_sql
+
 # ---------------------------------------------------------------------------
 # Cached-intermediate accounting (ADVICE r6): banded_srp_candidates (and
 # cosine_dedup_pairs' member map) persist skinny tables consumed by several
@@ -320,23 +323,24 @@ def bfs_hops(edges: DataFrame, max_hops: int = 4) -> DataFrame:
     return out
 
 
-def pagerank(
-    edges: DataFrame, iterations: int = 10, damping: float = 0.85
+def _pagerank_loop(
+    edges: DataFrame,
+    iterations: int,
+    r_type: str,
+    rules,
+    local=None,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over an undirected u<v edge list:
-    (node, pagerank).
+    """The power-iteration skeleton shared by :func:`pagerank` and
+    :func:`pagerank_quantized`: (node, r) after ``iterations`` rounds.
 
-    Power iteration: rank_{t+1}(n) = (1-d)/N + d * sum over neighbors m
-    of rank_t(m)/degree(m). Every node in the edge list has degree >= 1
-    (no dangling mass). Each iteration is one shuffle join on node id +
-    one groupBy — the standard large-scale formulation; adjacency and
-    degrees are computed once and cached across iterations.
+    ``rules(n_nodes)`` returns the three Columns that differ between the
+    two forms: the initial rank, the per-edge contribution (over
+    ``rk.r`` and ``a.degree``) and the damped update (over
+    ``in_mass``). ``local(sym, n_nodes, n_edges)`` may return a
+    single-task result instead of the distributed loop, or None.
 
-    Cross-partition double summation makes the result engine- and
-    partitioning-nondeterministic in the last ulp, so this is a
-    rows-only query (the pytest gate compares against a numpy power
-    iteration at 1e-9 instead of a SQL oracle).
-    """
+    One shuffle join + groupBy-sum per iteration; the adjacency and the
+    degrees are computed once and cached across iterations."""
     # Eagerly checkpoint the symmetrized list: deg, adj and the rank
     # init all derive from it, and the upstream edge construction (e.g.
     # the exact kNN build) must run ONCE, not once per consumer —
@@ -345,14 +349,19 @@ def pagerank(
     deg = sym.groupBy(F.col("u").alias("node")).agg(
         F.count("*").alias("degree")
     )
-    n_nodes = deg.count()
+    # node and directed-edge totals from one job
+    tot = deg.agg(F.count("*").alias("n"), F.sum("degree").alias("m")).first()
+    n_nodes, n_edges = tot["n"], tot["m"]
     if n_nodes == 0:
         # empty edge list (e.g. a corpus with no external links feeding
         # domain_authority): an empty rank table, not ZeroDivisionError
         # (ADVICE r10 #3)
-        return edges.sparkSession.createDataFrame(
-            [], "node long, pagerank double"
-        )
+        return edges.sparkSession.createDataFrame([], f"node long, r {r_type}")
+    if local is not None:
+        out = local(sym, n_nodes, n_edges)
+        if out is not None:
+            return out
+    r0, contrib, update = rules(n_nodes)
     adj = (
         sym.alias("s")
         .join(deg.alias("g"), F.col("s.u") == F.col("g.node"))
@@ -363,7 +372,6 @@ def pagerank(
         )
         .cache()
     )
-    base = (1.0 - damping) / n_nodes
     # Each iteration references `ranks` twice (contribs + the node-list
     # left join), so lineage doubles per round — localCheckpoint truncates
     # the logical plan (cache alone leaves it growing 2^iterations).
@@ -376,30 +384,19 @@ def pagerank(
     # round grows with the graph, so past 10M nodes every round
     # checkpoints eagerly again (the r10 posture).
     ckpt_every = 2 if n_nodes < 10_000_000 else 1
-    ranks = deg.select(
-        "node", F.lit(1.0 / n_nodes).alias("rank")
-    ).localCheckpoint(eager=True)
+    ranks = deg.select("node", r0.alias("r")).localCheckpoint(eager=True)
     for i in range(iterations):
         contribs = (
             adj.alias("a")
-            .join(ranks.alias("r"), F.col("a.src") == F.col("r.node"))
-            .select(
-                F.col("a.dst").alias("node"),
-                (F.col("r.rank") / F.col("a.degree")).alias("contrib"),
-            )
+            .join(ranks.alias("rk"), F.col("a.src") == F.col("rk.node"))
+            .select(F.col("a.dst").alias("node"), contrib.alias("contrib"))
             .groupBy("node")
             .agg(F.sum("contrib").alias("in_mass"))
         )
-        new_ranks = (
+        ranks = (
             ranks.select("node")
             .join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))
-                ).alias("rank"),
-            )
+            .select("node", update.alias("r"))
         )
         if (i + 1) % ckpt_every == 0 or i == iterations - 1:
             # FINAL iteration checkpoints eagerly (ADVICE r12): with the
@@ -410,12 +407,41 @@ def pagerank(
             # the 10-round sf0.1 loop vs ~1.8 s with the adjacency held.
             # The eager final cut materializes all rounds while adj is
             # still persisted; the in-loop cuts stay lazy (the r12 win).
-            new_ranks = new_ranks.localCheckpoint(
+            ranks = ranks.localCheckpoint(
                 eager=(ckpt_every == 1 or i == iterations - 1)
             )
-        ranks = new_ranks
     adj.unpersist()
-    return ranks.select("node", F.col("rank").alias("pagerank"))
+    return ranks
+
+
+def pagerank(
+    edges: DataFrame, iterations: int = 10, damping: float = 0.85
+) -> DataFrame:
+    """Fixed-iteration PageRank over an undirected u<v edge list:
+    (node, pagerank).
+
+    Power iteration: rank_{t+1}(n) = (1-d)/N + d * sum over neighbors m
+    of rank_t(m)/degree(m). Every node in the edge list has degree >= 1
+    (no dangling mass). Each iteration is one shuffle join on node id +
+    one groupBy — the standard large-scale formulation (see
+    :func:`_pagerank_loop`).
+
+    Cross-partition double summation makes the result engine- and
+    partitioning-nondeterministic in the last ulp, so this is a
+    rows-only query (the pytest gate compares against a numpy power
+    iteration at 1e-9 instead of a SQL oracle).
+    """
+
+    def rules(n_nodes: int):
+        base = (1.0 - damping) / n_nodes
+        return (
+            F.lit(1.0 / n_nodes),
+            F.col("rk.r") / F.col("a.degree"),
+            F.lit(base) + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0)),
+        )
+
+    ranks = _pagerank_loop(edges, iterations, "double", rules)
+    return ranks.select("node", F.col("r").alias("pagerank"))
 
 
 # Scaled-integer PageRank: rank mass carried as int64 units of 1/PR_SCALE.
@@ -431,17 +457,27 @@ PR_DAMP_NUM, PR_DAMP_DEN = 17, 20  # damping 0.85 as an exact rational
 
 # Small-graph strategy switch for pagerank_quantized (round 13): below
 # this node count the whole symmetrized edge list fits one Arrow task
-# (kNN graphs bound degree by 2k, web-ish graphs by the crawl budget;
-# 65k nodes x a few hundred edges each is tens of MB), and TEN
-# distributed iterations — each a join + groupBy + left join, i.e. ~30
-# tiny shuffle stages whose scheduling dominates — collapse into one
-# numpy loop INSIDE a task. Integer floor arithmetic is summation-order
-# independent, so the result is bit-identical to the distributed loop
-# (pinned by tests/test_graph.py::test_pagerank_quantized_local_parity);
+# (kNN graphs bound degree by 2k, web-ish graphs by the crawl budget),
+# and TEN distributed iterations — each a join + groupBy + left join,
+# i.e. ~30 tiny shuffle stages whose scheduling dominates — collapse
+# into one numpy loop INSIDE a task. Integer floor arithmetic is
+# summation-order independent, so the result is bit-identical to the
+# distributed loop (pinned by
+# tests/test_pair_cascade.py::test_pagerank_quantized_local_parity);
 # above the bound the shuffle loop is the only thing that scales and
 # runs unchanged. Same family of size switch as SCORING_FOLD_MAX_N and
 # the broadcast join-back bound.
 PR_LOCAL_MAX_NODES = 65_536
+# The dimension that actually blows up a one-task path is the EDGE
+# count: a small but dense graph coalesces every edge into one task.
+# The local path also needs at most this many directed edges (rows of
+# the symmetrized list; 2^21 ~ 1M undirected edges). There the task
+# holds ~6 int64 arrays of that length (~100 MB). Its 10-round numpy
+# loop alone took 0.6 s at 2^20 and 2.6 s at 2^22 directed edges on a
+# 4-vCPU host, against ~1.8 s for the whole distributed loop on the
+# sf0.1 kNN graph: past the bound, one core would do the work all cores
+# can share.
+PR_LOCAL_MAX_EDGES = 1 << 21
 
 
 def _pagerank_quantized_local(
@@ -497,90 +533,39 @@ def pagerank_quantized(
     rank in units of 1/scale and ``pagerank`` is the single exact
     double division pr_scaled/scale.
 
-    Same plan shape as :func:`pagerank` (cached adjacency+degree, one
-    shuffle join + groupBy-sum per iteration), but the per-edge
-    contribution is ``r DIV degree`` and the damped update is
+    Same plan shape as :func:`pagerank` (the shared
+    :func:`_pagerank_loop`), but the per-edge contribution is
+    ``r DIV degree`` and the damped update is
     ``base + (17 * in_mass) DIV 20`` — integer ops whose results are
     identical under any partitioning, so unlike the float form this has
     an exact DuckDB oracle (queries/graph.py unrolls the iterations as
     chained CTEs). Rank error vs the float form is bounded by the floor
     losses: <= iterations * (max_degree + 1) units of 1/scale, i.e.
-    ~1e-11 at the default scale (pinned vs numpy in test_graph.py)."""
-    # Eagerly checkpoint the symmetrized list: deg, adj and the rank
-    # init all derive from it, and the upstream edge construction (e.g.
-    # the exact kNN build) must run ONCE, not once per consumer —
-    # measured 82 s -> ~47 s on the sf0.1 kNN graph.
-    sym = symmetrize(edges).localCheckpoint(eager=True)
-    deg = sym.groupBy(F.col("u").alias("node")).agg(
-        F.count("*").alias("degree")
-    )
-    n_nodes = deg.count()
-    if n_nodes == 0:
-        # empty edge list -> empty rank table (ADVICE r10 #3); the DuckDB
-        # oracle agrees by construction (pr0 selects FROM the empty deg)
-        return edges.sparkSession.createDataFrame(
-            [], "node long, pr_scaled long, pagerank double"
+    ~1e-11 at the default scale (pinned vs numpy in test_graph.py).
+
+    Graphs with at most ``local_max_nodes`` nodes AND at most
+    PR_LOCAL_MAX_EDGES directed edges run as one Arrow task
+    (bit-identical output)."""
+
+    def rules(n_nodes: int):
+        base = (scale * (PR_DAMP_DEN - PR_DAMP_NUM)) // (PR_DAMP_DEN * n_nodes)
+        return (
+            F.lit(scale // n_nodes).cast("long"),
+            F.expr("rk.r DIV a.degree"),
+            (
+                F.lit(base).cast("long")
+                + F.expr(
+                    f"({PR_DAMP_NUM} * coalesce(in_mass, 0L)) DIV {PR_DAMP_DEN}"
+                )
+            ).cast("long"),
         )
-    if n_nodes <= local_max_nodes:
-        # small-graph strategy (see PR_LOCAL_MAX_NODES): one Arrow task
-        # replaces ~3 shuffle stages per iteration; bit-identical output.
-        ranks = _pagerank_quantized_local(sym, n_nodes, iterations, scale)
-        return ranks.select(
-            "node",
-            F.col("r").alias("pr_scaled"),
-            (F.col("r").cast("double") / F.lit(float(scale))).alias("pagerank"),
-        )
-    adj = (
-        sym.alias("s")
-        .join(deg.alias("g"), F.col("s.u") == F.col("g.node"))
-        .select(
-            F.col("s.u").alias("src"),
-            F.col("s.v").alias("dst"),
-            F.col("g.degree").alias("degree"),
-        )
-        .cache()
-    )
-    base = (scale * (PR_DAMP_DEN - PR_DAMP_NUM)) // (PR_DAMP_DEN * n_nodes)
-    # Same adaptive checkpoint cadence as the float form (see pagerank):
-    # every 2nd round, lazily, below 10M nodes — A/B-measured 5.9 s ->
-    # 3.6 s on the sf0.1 kNN graph with hash-identical output (integer
-    # arithmetic is invariant to how often lineage is cut).
-    ckpt_every = 2 if n_nodes < 10_000_000 else 1
-    ranks = deg.select(
-        "node", F.lit(scale // n_nodes).cast("long").alias("r")
-    ).localCheckpoint(eager=True)
-    for i in range(iterations):
-        contribs = (
-            adj.alias("a")
-            .join(ranks.alias("rk"), F.col("a.src") == F.col("rk.node"))
-            .select(
-                F.col("a.dst").alias("node"),
-                F.expr("rk.r DIV a.degree").alias("contrib"),
-            )
-            .groupBy("node")
-            .agg(F.sum("contrib").cast("long").alias("in_mass"))
-        )
-        ranks = (
-            ranks.select("node")
-            .join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base).cast("long")
-                    + F.expr(
-                        f"({PR_DAMP_NUM} * coalesce(in_mass, 0L)) "
-                        f"DIV {PR_DAMP_DEN}"
-                    )
-                ).cast("long").alias("r"),
-            )
-        )
-        if (i + 1) % ckpt_every == 0 or i == iterations - 1:
-            # eager on the FINAL iteration (ADVICE r12): materialize the
-            # loop while adj is still persisted — see pagerank above.
-            ranks = ranks.localCheckpoint(
-                eager=(ckpt_every == 1 or i == iterations - 1)
-            )
-    adj.unpersist()
+
+    def local(sym: DataFrame, n_nodes: int, n_edges: int):
+        if n_nodes <= local_max_nodes and n_edges <= PR_LOCAL_MAX_EDGES:
+            return _pagerank_quantized_local(sym, n_nodes, iterations, scale)
+        return None
+
+    ranks = _pagerank_loop(edges, iterations, "long", rules, local)
     return ranks.select(
         "node",
         F.col("r").alias("pr_scaled"),
@@ -599,11 +584,6 @@ KNN_ANN_RING_CAP = 128
 # uniform corpus (band_bits = log2(n / occupancy), floor 4 so tiny
 # corpora keep the pre-round-6 geometry and its pinned oracles).
 KNN_ANN_TARGET_OCCUPANCY = 256
-# Candidate join-back broadcasts the vector table when the corpus is at
-# most this many rows (~64 MB of float32 at 64 dims): the pairs-sized
-# candidate table then never shuffles. A billion-row corpus exceeds the
-# bound and keeps the correct shuffle join.
-JOINBACK_BROADCAST_MAX_ROWS = 250_000
 
 
 def derive_band_bits(n: int, target_occupancy: int = KNN_ANN_TARGET_OCCUPANCY) -> int:
@@ -620,89 +600,41 @@ def derive_band_bits(n: int, target_occupancy: int = KNN_ANN_TARGET_OCCUPANCY) -
     return max(4, math.ceil(math.log2(n / target_occupancy)))
 
 
-def _plane_fold_sql(j: int) -> str:
-    """Interpreted-HOF signed projection of plane ``j`` over the
-    ``embedding`` column (the pre-round-13 spelling, kept as the
-    any-width fallback)."""
-    from .similarity import LSH_C1, LSH_C2, LSH_HALF, LSH_MOD
-
-    # constants as LONG literals: ANSI mode errors on the int32
-    # overflow of (j+1)*C1 + (i-1)*C2 otherwise (BUILDER_NOTES)
-    sign = (
-        f"(CASE WHEN (({j + 1}L * {LSH_C1}L + (i - 1) * {LSH_C2}L) % {LSH_MOD}L)"
-        f" < {LSH_HALF}L THEN 1 ELSE -1 END)"
-    )
-    return (
-        "aggregate(transform(sequence(1, size(embedding)), "
-        f"i -> {sign} * CAST(embedding[i - 1] AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
-
-
-def _plane_proj_sql(j: int, unroll: bool) -> str:
-    """Signed projection of plane ``j`` — the fold, or (round 13,
-    VERDICT r12 #2) the size()-guarded unrolled add/subtract chain:
-    every (plane, dim) sign is a compile-time constant, so the fixed
-    64-dim width collapses to plain codegen-able arithmetic with the
-    SAME left-to-right evaluation order (bit-identical; multiplying by
-    ±1 is an exact identity/negation, a-b == a+(-b) in IEEE)."""
-    fold = _plane_fold_sql(j)
-    if not unroll:
-        return fold
-    from .similarity import PLANE_UNROLL_DIM, plane_dot_chain_sql
-
-    return (
-        f"(CASE WHEN size(embedding) = {PLANE_UNROLL_DIM} "
-        f"THEN {plane_dot_chain_sql(j, 'embedding')} ELSE {fold} END)"
-    )
-
-
-def _plane_bits_sql(planes: list[int], unroll: bool = False) -> str:
-    """Packed sign bits of the deterministic SRP planes (JVM fold —
-    bit-portable with the DuckDB mirror; ``unroll=True`` swaps each
-    fold for the codegen-able constant-sign chain, same bits)."""
-    bits = [
-        f"(CASE WHEN {_plane_proj_sql(j, unroll)} > 0 THEN {1 << b}L ELSE 0L END)"
+def _plane_bits_sql(planes: list[int]) -> str:
+    """Packed sign bits of the deterministic SRP planes over the
+    ``embedding`` column (JVM fold — bit-portable with the DuckDB
+    mirror)."""
+    return " + ".join(
+        f"(CASE WHEN {hyperplane_sign_sql(j, 'embedding')} > 0 THEN {1 << b}L ELSE 0L END)"
         for b, j in enumerate(planes)
-    ]
-    return " + ".join(bits)
-
-
-def _plane_dot_sql(j_expr: str, j_values: list[int] | None = None) -> str:
-    """Raw (unsigned) projection onto the deterministic +/-1 direction
-    of plane ``j_expr`` — same sign family as the bucket planes, but the
-    CONTINUOUS value, and the plane index may be a per-row SQL
-    expression (band-dependent ordering).
-
-    ``j_values`` (round 13): when the caller knows the finite set of
-    plane indices ``j_expr`` can take (one per band), the projection
-    dispatches through a CASE to the per-plane unrolled constant-sign
-    chain — codegen-able, bit-identical (same guard/fallback story as
-    :func:`_plane_proj_sql`)."""
-    from .similarity import LSH_C1, LSH_C2, LSH_HALF, LSH_MOD
-
-    sign = (
-        f"(CASE WHEN ((({j_expr} + 1) * {LSH_C1}L + (i - 1) * {LSH_C2}L)"
-        f" % {LSH_MOD}L) < {LSH_HALF}L THEN 1 ELSE -1 END)"
     )
-    fold = (
-        "aggregate(transform(sequence(1, size(embedding)), "
-        f"i -> {sign} * CAST(embedding[i - 1] AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
-    if not j_values:
-        return fold
-    from .similarity import PLANE_UNROLL_DIM, plane_dot_chain_sql
 
-    branches = " ".join(
-        f"WHEN {j} THEN {plane_dot_chain_sql(j, 'embedding')}"
-        for j in j_values
-    )
-    return (
-        f"(CASE WHEN size(embedding) = {PLANE_UNROLL_DIM} "
-        f"THEN (CASE ({j_expr}) {branches} ELSE {fold} END) "
-        f"ELSE {fold} END)"
-    )
+
+def banded_signature_table(
+    base: DataFrame, n_bands: int, band_bits: int
+) -> DataFrame:
+    """(id, band, bkt) — one row per (vector, band), JVM-fold signatures
+    (bit-portable with the DuckDB mirrors). ``base``: id, embedding."""
+    return base.select(
+        "id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(band).alias("band"),
+                        F.expr(
+                            _plane_bits_sql(
+                                [band * band_bits + b for b in range(band_bits)]
+                            )
+                        )
+                        .cast("int")
+                        .alias("bkt"),
+                    )
+                    for band in range(n_bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select("id", "bb.band", "bb.bkt")
 
 
 def banded_srp_candidates(
@@ -711,7 +643,6 @@ def banded_srp_candidates(
     band_bits: int | None = None,
     max_bucket: int | None = KNN_ANN_MAX_BUCKET,
     ring_cap: int | None = KNN_ANN_RING_CAP,
-    unroll_planes: bool = False,
 ) -> DataFrame:
     """Distinct candidate pairs (ida < idb) from banded random-hyperplane
     LSH over ``base`` (columns: id, embedding) — the shared candidate
@@ -722,26 +653,6 @@ def banded_srp_candidates(
     if band_bits is None:
         band_bits = derive_band_bits(base.count())
 
-    def band_bucket_sql(band: int) -> str:
-        return _plane_bits_sql(
-            [band * band_bits + b for b in range(band_bits)],
-            unroll=unroll_planes,
-        )
-
-    banded = base.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        F.expr(band_bucket_sql(band)).cast("int").alias("bkt"),
-                    )
-                    for band in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bkt")
     # The signature table is referenced by SEVERAL downstream plans (the
     # bucket-size aggregate, the size join, and the exact/ring pair
     # branches); without a persist each reference recomputes all
@@ -750,17 +661,12 @@ def banded_srp_candidates(
     # skinny (id, band, bkt — ~24 B x n x n_bands; MEMORY_AND_DISK
     # spills rather than OOMs at 100 TB scale), the arrays stay behind.
     # Tracked for release on the next build (see _ANN_CACHES above).
-    banded = _track_ann_cache(banded.persist())
+    banded = _track_ann_cache(
+        banded_signature_table(base, n_bands, band_bits).persist()
+    )
 
     def exact_pairs(members: DataFrame) -> DataFrame:
-        a = members.alias("a")
-        b = members.alias("b")
-        return a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col("a.id") < F.col("b.id")),
-        ).select(F.col("a.id").alias("ida"), F.col("b.id").alias("idb"))
+        return band_join(members, ["band", "bkt"], ids=("ida", "idb"))
 
     def ring_pairs(members: DataFrame, cap: int) -> DataFrame:
         # Ring candidates: rank bucket members by a CONTINUOUS random
@@ -780,13 +686,8 @@ def banded_srp_candidates(
         # symmetrize covers both directions.
         if cap < 1:
             raise ValueError(f"ring_cap must be >= 1, got {cap}")
-        proj = _plane_dot_sql(
-            "(CAST(band AS INT) + " f"{n_bands * band_bits})",
-            j_values=(
-                [n_bands * band_bits + b for b in range(n_bands)]
-                if unroll_planes
-                else None
-            ),
+        proj = hyperplane_sign_sql(
+            f"CAST(band AS INT) + {n_bands * band_bits}", "embedding"
         )
         wpos = Window.partitionBy("band", "bkt").orderBy("proj", "id")
         wall = Window.partitionBy("band", "bkt")
@@ -1163,33 +1064,6 @@ def _bucket_local_threshold_pairs(
     return parts.groupBy("id_a", "id_b").agg(F.max("cos_sim").alias("cos_sim"))
 
 
-def banded_signature_table(
-    base: DataFrame, n_bands: int, band_bits: int
-) -> DataFrame:
-    """(id, band, bkt) — one row per (vector, band), JVM-fold signatures
-    (bit-portable with the DuckDB mirrors). ``base``: id, embedding."""
-    return base.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        F.expr(
-                            _plane_bits_sql(
-                                [band * band_bits + b for b in range(band_bits)]
-                            )
-                        )
-                        .cast("int")
-                        .alias("bkt"),
-                    )
-                    for band in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bkt")
-
-
 def knn_topk_append_batch(
     new_vectors: DataFrame,
     existing_vectors: DataFrame,
@@ -1232,7 +1106,7 @@ def knn_topk_append_batch(
     state rewrite; the state itself stays edge-count-bounded either
     way (n x k rows).
     """
-    from .similarity import dot_sql, norm_sql
+    from .similarity import norm_sql
 
     base_new = new_vectors.select(
         F.col(id_col).alias("id"),
@@ -1241,42 +1115,40 @@ def knn_topk_append_batch(
     ).filter(F.col("nrm") > 0)
     all_vecs = existing_vectors.unionByName(base_new)
 
-    sig_new = banded_signature_table(base_new, n_bands, band_bits)
-    sig_all = banded_signature_table(all_vecs, n_bands, band_bits)
-    cand = (
-        sig_new.alias("a")
-        .join(
-            sig_all.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col("a.id") != F.col("b.id")),
-        )
-        .select(
-            F.least("a.id", "b.id").alias("ida"),
-            F.greatest("a.id", "b.id").alias("idb"),
-        )
-        .distinct()
+    cand = band_join(
+        banded_signature_table(all_vecs, n_bands, band_bits),
+        ["band", "bkt"],
+        ids=("ida", "idb"),
+        probe=banded_signature_table(base_new, n_bands, band_bits),
+    ).distinct()
+    both = _both_directions(
+        cosine_verify(cand, all_vecs, ids=("ida", "idb"), vec=("embedding", "e"))
     )
-    va = all_vecs.select(
-        F.col("id").alias("ida"), F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
+    # dedupe (query, neighbor) BEFORE ranking: in normal forward
+    # progress the state never overlaps the new candidates (every new
+    # pair touches a vector no prior batch has seen), but a foreachBatch
+    # REPLAY re-scores a batch the state already integrated — without
+    # the dedupe the duplicate row eats a rank slot and evicts the
+    # node's true k-th neighbor (cos values of duplicates are identical,
+    # so max() is exact)
+    merged = (
+        existing_topk.unionByName(both)
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.max("cos_sim").alias("cos_sim"))
     )
-    vb = all_vecs.select(
-        F.col("id").alias("idb"), F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    scored = (
-        cand.join(va, "ida")
-        .join(vb, "idb")
-        .select(
-            "ida",
-            "idb",
-            (
-                F.expr(dot_sql("ea", "eb")) / (F.col("na") * F.col("nb"))
-            ).alias("cos_sim"),
-        )
-    )
-    both = scored.select(
+    return _top_k(merged, k).drop("rank"), base_new
+
+
+def _both_directions(scored: DataFrame) -> DataFrame:
+    """(ida, idb, cos_sim) pairs -> (query_id, neighbor_id, cos_sim) rows
+    in both directions.
+
+    By EXPLODE, not a union of two projections: ``scored`` is the
+    expensive end of the pipeline (join-backs + exact cosines), and under
+    a broadcast join-back there is no shuffle exchange for Spark to
+    reuse — a union would execute the whole scoring plan twice. One
+    generator row -> two rows, cosines computed once."""
+    return scored.select(
         F.explode(
             F.array(
                 F.struct(
@@ -1291,27 +1163,17 @@ def knn_topk_append_batch(
         ).alias("qn"),
         "cos_sim",
     ).select("qn.query_id", "qn.neighbor_id", "cos_sim")
-    # dedupe (query, neighbor) BEFORE ranking: in normal forward
-    # progress the state never overlaps the new candidates (every new
-    # pair touches a vector no prior batch has seen), but a foreachBatch
-    # REPLAY re-scores a batch the state already integrated — without
-    # the dedupe the duplicate row eats a rank slot and evicts the
-    # node's true k-th neighbor (cos values of duplicates are identical,
-    # so max() is exact)
-    merged = (
-        existing_topk.unionByName(both)
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("cos_sim").alias("cos_sim"))
-    )
+
+
+def _top_k(both: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k rows by (cos_sim desc, neighbor_id asc), with the
+    1-based ``rank`` column."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
-    updated = (
-        merged.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
+    return both.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
     )
-    return updated, base_new
 
 
 def knn_topk_to_edges(topk: DataFrame) -> DataFrame:
@@ -1411,7 +1273,7 @@ def knn_edges_ann(
       corpus rows (covers every conformance corpus; exactness is free
       there), ``"bucket"`` above (the 100-TB call).
     """
-    from .similarity import dot_sql, norm_sql
+    from .similarity import norm_sql
 
     if scoring not in ("auto", "fold", "bucket"):
         raise ValueError(f"scoring must be auto|fold|bucket, got {scoring!r}")
@@ -1435,81 +1297,11 @@ def knn_edges_ann(
         both = parts.groupBy("query_id", "neighbor_id").agg(
             F.max("cos_sim").alias("cos_sim")
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id")
-        )
-        topk = both.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= k
-        )
-        return (
-            topk.select(
-                F.least("query_id", "neighbor_id").alias("u"),
-                F.greatest("query_id", "neighbor_id").alias("v"),
-                "cos_sim",
-            )
-            .distinct()
-        )
+        return knn_topk_to_edges(_top_k(both, k))
 
     cand = banded_srp_candidates(base, n_bands, band_bits, max_bucket, ring_cap)
-    # Join-back physical strategy: the candidate table is pairs-sized
-    # (tens of millions of skinny rows at 100x) while the vector table
-    # is corpus-sized; when the corpus fits a broadcast
-    # (JOINBACK_BROADCAST_MAX_ROWS, ~64 MB of float32 at 64 dims) the
-    # two join-backs skip shuffling the candidate table twice. Beyond
-    # the bound — the real 100 TB corpus — the shuffle join is correct
-    # and this hint stays off. Plan-only: output is unchanged.
-    bcast = n <= JOINBACK_BROADCAST_MAX_ROWS
-    va = base.select(
-        F.col("id").alias("ida"), F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    vb = base.select(
-        F.col("id").alias("idb"), F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    scored = (
-        cand.join(F.broadcast(va) if bcast else va, "ida")
-        .join(F.broadcast(vb) if bcast else vb, "idb")
-        .select(
-            "ida",
-            "idb",
-            (
-                F.expr(dot_sql("ea", "eb")) / (F.col("na") * F.col("nb"))
-            ).alias("cos_sim"),
-        )
-    )
-    # Symmetrize by EXPLODE, not union-of-two-projections: `scored` is
-    # the expensive end of the pipeline (candidate join-backs + exact
-    # cosines), and under a broadcast join-back there is no shuffle
-    # exchange for Spark to reuse — a union would execute the whole
-    # scoring plan twice. One generator row -> two (query, neighbor)
-    # rows, cosines computed once, bit-identical output.
-    both = scored.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("ida").alias("query_id"),
-                    F.col("idb").alias("neighbor_id"),
-                ),
-                F.struct(
-                    F.col("idb").alias("query_id"),
-                    F.col("ida").alias("neighbor_id"),
-                ),
-            )
-        ).alias("qn"),
-        "cos_sim",
-    ).select("qn.query_id", "qn.neighbor_id", "cos_sim")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    topk = both.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-    return (
-        topk.select(
-            F.least("query_id", "neighbor_id").alias("u"),
-            F.greatest("query_id", "neighbor_id").alias("v"),
-            "cos_sim",
-        )
-        .distinct()
-    )
+    # Join back by id, broadcast under the pairs.join_back size bound:
+    # the candidate table is pairs-sized (tens of millions of skinny rows
+    # at 100x) while the vector table is corpus-sized.
+    scored = cosine_verify(cand, base, n, ids=("ida", "idb"), vec=("embedding", "e"))
+    return knn_topk_to_edges(_top_k(_both_directions(scored), k))

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .pairs import collapse_to_reps, cosine_verify, expand_members, self_cosine
+
 # Deterministic hyperplane sign pattern: sign(j, d) = +1 if
 # ((j+1)*73856093 + d*19349663) % 97 < 48 else -1. Integer-only -> portable.
 LSH_PLANES = 16
@@ -103,66 +105,24 @@ def duck_norm(a: str) -> str:
     return f"sqrt({duck_dot(a, a)})"
 
 
-# Fixed width unrolled in the plane-sign expressions: the embeddings
-# fixture is 64-dim at every SF. Other widths fall back to the fold.
-PLANE_UNROLL_DIM = 64
+def hyperplane_sign_sql(j: int | str, vec: str) -> str:
+    """Spark SQL: signed projection of ``vec`` onto the deterministic ±1
+    plane ``j`` — the one SRP projection builder (bucket bits take its
+    sign; the ANN ring order takes its value).
 
-
-def plane_signs(j: int, dim: int = PLANE_UNROLL_DIM) -> list[int]:
-    """The deterministic ±1 signs of plane ``j`` for dims 0..dim-1 —
-    the Python-side constant fold of the SQL sign CASE."""
-    base = (j + 1) * LSH_C1
-    return [
-        1 if (base + d * LSH_C2) % LSH_MOD < LSH_HALF else -1
-        for d in range(dim)
-    ]
-
-
-def plane_dot_chain_sql(j: int, vec: str, dim: int = PLANE_UNROLL_DIM) -> str:
-    """Explicitly left-associated unrolled signed sum
-    ``(((0 + v[0]) - v[1]) + ...)`` for plane ``j`` over a ``dim``-wide
-    array column — plain codegen-able arithmetic with the SAME
-    evaluation order and floating-point result as the interpreted fold
-    (IEEE a-b == a+(-b); multiplying by the ±1 sign constant is an exact
-    identity/negation). Callers must guard with ``size(vec) = dim``."""
-    chain = "CAST(0 AS DOUBLE)"
-    for d, s in enumerate(plane_signs(j, dim)):
-        op = "+" if s > 0 else "-"
-        chain = f"({chain} {op} CAST({vec}[{d}] AS DOUBLE))"
-    return chain
-
-
-def hyperplane_sign_sql(j: int, vec: str, unroll: bool = False) -> str:
-    """Spark SQL: sign of dot(vec, h_j) with the deterministic ±1 plane.
-
-    The plane constant is precomputed in Python and emitted as a long
-    literal — (j+1)*C1 + d*C2 overflows int32 (ANSI mode would error).
-
-    ``unroll=True`` (round 13, the §4.1 lever of VERDICT r12 #2): the
-    sign of every (plane, dim) pair is a compile-time constant, so for
-    the fixed 64-dim width the whole fold collapses to an unrolled
-    add/subtract chain — codegen-able instead of an interpreted
-    higher-order-function lambda, bit-identical output (size() guard
-    falls back to the fold for other widths). OPT-IN per call site like
-    dot_sql(unroll=): giant generated functions can regress past
-    codegen limits (the r12 semdedup lesson).
+    ``j`` is a plane index, or a per-row SQL expression for it. For an
+    index the plane constant is precomputed in Python and emitted as a
+    long literal — (j+1)*C1 + d*C2 overflows int32 (ANSI mode would
+    error). The sequence is folded DIRECTLY (no intermediate transform()
+    array): left to right in double, bit-identical to the DuckDB mirror,
+    and ±x is exact, so every spelling of a signed sum agrees.
     """
-    base = (j + 1) * LSH_C1
-    # fold the sequence DIRECTLY (no intermediate transform() array):
-    # same elements in the same left-to-right order — bit-identical to
-    # the previous transform+aggregate spelling and the DuckDB mirror —
-    # but one fewer 64-element array allocation per plane per row
-    fold = (
+    base = f"{(j + 1) * LSH_C1}L" if isinstance(j, int) else f"(({j}) + 1) * {LSH_C1}L"
+    return (
         f"aggregate(sequence(1, size({vec})), CAST(0 AS DOUBLE), (acc, d) -> "
-        f"acc + (CASE WHEN ({base}L + CAST(d - 1 AS BIGINT) * {LSH_C2}L) % {LSH_MOD} < {LSH_HALF} "
+        f"acc + (CASE WHEN ({base} + CAST(d - 1 AS BIGINT) * {LSH_C2}L) % {LSH_MOD} < {LSH_HALF} "
         f"THEN CAST(element_at({vec}, d) AS DOUBLE) "
         f"ELSE -CAST(element_at({vec}, d) AS DOUBLE) END))"
-    )
-    if not unroll:
-        return fold
-    return (
-        f"(CASE WHEN size({vec}) = {PLANE_UNROLL_DIM} "
-        f"THEN {plane_dot_chain_sql(j, vec)} ELSE {fold} END)"
     )
 
 
@@ -178,10 +138,10 @@ def duck_hyperplane_sign(j: int, vec: str) -> str:
     )
 
 
-def bucket_sql(vec: str, n_planes: int = LSH_PLANES, unroll: bool = False) -> str:
+def bucket_sql(vec: str, n_planes: int = LSH_PLANES) -> str:
     """LSH bucket id: n_planes sign bits packed into a long."""
     bits = " + ".join(
-        f"(CASE WHEN {hyperplane_sign_sql(j, vec, unroll=unroll)} > 0 "
+        f"(CASE WHEN {hyperplane_sign_sql(j, vec)} > 0 "
         f"THEN {1 << j}L ELSE 0L END)"
         for j in range(n_planes)
     )
@@ -335,9 +295,8 @@ def cosine_dedup_pairs(
       members equal reps). Output is identical to the naive path; the
       verify cost depends on DISTINCT vectors, not raw rows.
     * Candidates are (id, band, bucket) only; embeddings join back BY ID
-      after pair generation, so the float arrays never ride the
-      bucket-join shuffle (and the vector table broadcasts under
-      JOINBACK_BROADCAST_MAX_ROWS — plan-only).
+      after pair generation (pairs.cosine_verify), so the float arrays
+      never ride the bucket-join shuffle.
     * ``expand_components`` (default on): connected components of the
       pass-1 pairs, then EVERY within-component pair exactly verified.
       Ring sampling finds each near-dup group's chain but can miss far
@@ -363,17 +322,12 @@ def cosine_dedup_pairs(
     ).filter(F.col("nrm") > 0)
 
     if collapse_identical:
-        mem = base.withColumn(
-            "rep_id", F.min("id").over(Window.partitionBy("v"))
-        )
+        reps, mem_ids = collapse_to_reps(base, "v")
         from .graph import _track_ann_cache
 
         # consumed by four lazy references in the returned expansion
         # plan; tracked for release on the next build (ADVICE r6)
-        mem_ids = _track_ann_cache(mem.select("id", "rep_id").cache())
-        reps = mem.filter(F.col("id") == F.col("rep_id")).select(
-            "id", "v", "nrm"
-        )
+        _track_ann_cache(mem_ids)
     else:
         reps = base
 
@@ -401,7 +355,9 @@ def cosine_dedup_pairs(
             n_bands,
             band_bits,
         )
-        cand = None
+        rep_pairs = _bucket_local_threshold_pairs(
+            exploded, threshold, max_bucket, ring_cap
+        )
     else:
         cand = banded_srp_candidates(
             reps.select("id", F.col("v").alias("embedding")),
@@ -410,39 +366,7 @@ def cosine_dedup_pairs(
             max_bucket=max_bucket,
             ring_cap=ring_cap,
         ).select(F.col("ida").alias("id_a"), F.col("idb").alias("id_b"))
-
-    # Same join-back physical strategy as knn_edges_ann: broadcast the
-    # rep vector table under JOINBACK_BROADCAST_MAX_ROWS so the
-    # pairs-sized candidate table never shuffles; plan-only.
-    from .graph import JOINBACK_BROADCAST_MAX_ROWS
-
-    bcast = n <= JOINBACK_BROADCAST_MAX_ROWS
-    va = reps.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    vb = reps.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    def verify(pairs: DataFrame) -> DataFrame:
-        return (
-            pairs.join(F.broadcast(va) if bcast else va, "id_a")
-            .join(F.broadcast(vb) if bcast else vb, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                (
-                    F.expr(dot_sql("va", "vb")) / (F.col("na") * F.col("nb"))
-                ).alias("cos_sim"),
-            )
-            .filter(F.col("cos_sim") >= threshold)
-        )
-
-    if scoring == "bucket":
-        rep_pairs = _bucket_local_threshold_pairs(
-            exploded, threshold, max_bucket, ring_cap
-        )
-    else:
-        rep_pairs = verify(cand)
+        rep_pairs = cosine_verify(cand, reps, n, threshold=threshold)
 
     if expand_components:
         # COMPONENT-CLOSURE EXPANSION (round 6, default-on): ring
@@ -489,49 +413,15 @@ def cosine_dedup_pairs(
         cand2 = ca.join(cb, "component").filter(
             F.col("id_a") < F.col("id_b")
         ).select("id_a", "id_b")
-        rep_pairs = verify(cand2)
+        rep_pairs = cosine_verify(cand2, reps, n, threshold=threshold)
 
     if not collapse_identical:
         return rep_pairs.select("id_a", "id_b", "cos_sim")
 
-    # Intra-group: every member pair of an identical-vector group carries
-    # the rep's SELF-cosine — computed with the same dot/norm expressions
-    # the naive path would apply to the (equal) member vectors, so the
-    # double matches bit-for-bit (it is ~1.0 but not the literal 1.0:
-    # dot(v,v) != sqrt(dot)^2 in IEEE). The threshold filter is applied
-    # for strict semantic equality with the naive path.
-    self_cos = reps.select(
-        F.col("id").alias("rep_id"),
-        (
-            F.expr(dot_sql("v", "v")) / (F.col("nrm") * F.col("nrm"))
-        ).alias("cos_sim"),
-    ).filter(F.col("cos_sim") >= threshold)
-    x, y = mem_ids.alias("x"), mem_ids.alias("y")
-    intra = (
-        x.join(
-            y,
-            (F.col("x.rep_id") == F.col("y.rep_id"))
-            & (F.col("x.id") < F.col("y.id")),
-        )
-        .join(self_cos.alias("s"), F.col("x.rep_id") == F.col("s.rep_id"))
-        .select(
-            F.col("x.id").alias("id_a"),
-            F.col("y.id").alias("id_b"),
-            "cos_sim",
-        )
-    )
-    # Cross-group: cos(a, b) for identical-vector members equals the
-    # rep-pair cosine; expand each rep pair to the member cross product.
-    ma = mem_ids.select(F.col("rep_id").alias("id_a"), F.col("id").alias("m_a"))
-    mb = mem_ids.select(F.col("rep_id").alias("id_b"), F.col("id").alias("m_b"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("m_a", "m_b").alias("id_a"),
-            F.greatest("m_a", "m_b").alias("id_b"),
-            "cos_sim",
-        )
+    # Intra-group pairs carry the rep's self-cosine; cross-group pairs
+    # the rep-pair cosine (exact: members equal reps).
+    intra, cross = expand_members(
+        rep_pairs, mem_ids, "cos_sim", rep_joins=(self_cosine(reps, threshold),)
     )
     return intra.unionByName(cross)
 

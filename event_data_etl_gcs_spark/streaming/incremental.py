@@ -32,7 +32,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.time import epoch_millis_to_timestamp
 from ..operators.upsert import merge_upsert
 from ..schemas import LOG_DATA_SCHEMA
 from ..sources.parquet_sink import write_parquet_table
@@ -101,14 +100,10 @@ def run_incremental_available_now(
     ts — still collapse), and state eviction is driven purely by the
     watermark rather than key-space growth.
     """
-    from ..plans.sparkify import build_time, build_users
+    from ..plans.sparkify import build_time, build_users, next_song_events
 
     raw = streaming_log_source(spark, raw_dir)
-    events = (
-        raw.filter(F.col("page") == "NextSong")
-        .withColumn("start_time", epoch_millis_to_timestamp("ts"))
-        .withWatermark("start_time", watermark)
-    )
+    events = next_song_events(raw).withWatermark("start_time", watermark)
     if dedup_within_watermark:
         keys = [k for k in dedup_keys if k != "start_time"]
         events = events.dropDuplicatesWithinWatermark(keys)

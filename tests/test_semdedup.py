@@ -20,36 +20,6 @@ def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-def test_collapse_identical_is_plan_only_on_distinct_corpus(spark):
-    emb = load_table(spark, SF, "embeddings")
-    on = semdedup_pairs(emb, collapse_identical=True)
-    off = semdedup_pairs(emb, collapse_identical=False)
-    cols = ["cluster_id", "id_a", "id_b", "cos_sim"]
-    assert _rows(on, cols) == _rows(off, cols)
-
-
-def test_collapse_expansion_on_planted_replicas(spark):
-    """100 replicas of each of 3 base vectors: the pair join must run on
-    3 distinct vectors but the output must equal the naive all-member
-    result — intra-group pairs carry the self-cosine, cross-group pairs
-    the rep-pair cosine."""
-    base = load_table(spark, SF, "embeddings").orderBy("vec_id").limit(3)
-    planted = (
-        base.crossJoin(spark.range(100).select(F.col("id").alias("rep")))
-        .select(
-            (F.col("vec_id") * 1000 + F.col("rep")).alias("vec_id"),
-            "embedding",
-        )
-    )
-    cols = ["cluster_id", "id_a", "id_b", "cos_sim"]
-    on = semdedup_pairs(planted, threshold=0.2, k=2)
-    off = semdedup_pairs(planted, threshold=0.2, k=2, collapse_identical=False)
-    got, want = _rows(on, cols), _rows(off, cols)
-    assert got == want
-    # every replica group contributes its C(100,2) intra pairs
-    assert len(got) >= 3 * (100 * 99) // 2
-
-
 def test_max_cluster_guard_raises(spark):
     emb = load_table(spark, SF, "embeddings")
     with pytest.raises(ValueError, match="max_cluster"):

@@ -3,7 +3,8 @@ must be output-identical to the naive quadratic build wherever caps don't
 engage, collapse-identical must be a pure plan rewrite (same pairs, same
 doubles) on duplicate-bearing corpora, and hot-bucket ring sampling must
 keep duplicate recall (the SCALE_r5 lesson: exact copies sort adjacent
-under the continuous projection)."""
+under the continuous projection). The collapse-rewrite pin runs in the
+default tier, in test_pair_cascade.py."""
 
 from __future__ import annotations
 
@@ -43,26 +44,6 @@ def test_defaults_equal_naive_when_caps_idle(spark):
     want = _pairs(
         cosine_dedup_pairs(
             emb, threshold=0.0, max_bucket=None, ring_cap=None,
-            collapse_identical=False,
-        )
-    )
-    assert got == want and len(got) > 0
-
-
-def test_collapse_is_pure_rewrite_on_duplicates(spark):
-    """On a corpus with exact-duplicate vectors, collapse-identical-first
-    must reproduce the naive pair set exactly: intra-group pairs carry
-    the self-cosine double, cross-group pairs the rep-pair double."""
-    dup = _dup_corpus(spark)
-    got = _pairs(
-        cosine_dedup_pairs(
-            dup, threshold=0.5, max_bucket=None, ring_cap=None,
-            collapse_identical=True,
-        )
-    )
-    want = _pairs(
-        cosine_dedup_pairs(
-            dup, threshold=0.5, max_bucket=None, ring_cap=None,
             collapse_identical=False,
         )
     )

@@ -93,50 +93,6 @@ def test_simhash_close_for_near_duplicates(spark):
     assert hamming <= 8  # 1-token edit out of 10 flips few bits
 
 
-def test_incremental_minhash_matches_full_rebuild(spark, tmp_path):
-    """Persisted-signature incremental indexing: write the existing
-    corpus' signature table to parquet, reload it, check a new batch
-    against it — the incremental pairs must equal the from-scratch
-    full-corpus pairs restricted to pairs touching a new doc, and
-    appending new_sig must leave the table ready for the next batch."""
-    from event_data_etl_gcs_spark.operators.dedup import (
-        minhash_incremental_pairs,
-        minhash_lsh_pairs,
-        minhash_signatures,
-    )
-
-    docs = load_table(spark, SF, "documents")
-    existing = docs.filter(F.col("doc_id") % 5 != 0)
-    new = docs.filter(F.col("doc_id") % 5 == 0)
-
-    sig_path = str(tmp_path / "sig_table")
-    minhash_signatures(existing).filter(F.expr("size(sh_hashes) > 0")).write.parquet(sig_path)
-    persisted = spark.read.parquet(sig_path)
-
-    inc_pairs, new_sig = minhash_incremental_pairs(new, persisted, threshold=0.5)
-    got = {(r.id_a, r.id_b): r.jaccard for r in inc_pairs.collect()}
-
-    full = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in minhash_lsh_pairs(docs, threshold=0.5).collect()
-        if r.id_a % 5 == 0 or r.id_b % 5 == 0
-    }
-    assert got == full
-
-    # append contract: table now covers the whole corpus
-    new_sig.write.mode("append").parquet(sig_path)
-    appended = spark.read.parquet(sig_path)
-    all_ids = {r.doc_id for r in docs.select("doc_id").collect()}
-    no_shingle = all_ids - {r.id for r in appended.select("id").collect()}
-    # only docs with no shingles (< 3 tokens) may be absent
-    from event_data_etl_gcs_spark.operators.dedup import minhash_signatures as ms
-    expected_absent = {
-        r.id
-        for r in ms(docs).filter(F.expr("size(sh_hashes) = 0")).select("id").collect()
-    }
-    assert no_shingle == expected_absent
-
-
 def test_wav_roundtrip_and_resample(spark):
     """WAV header/PCM byte math: decode matches a pure-python recompute,
     and integer-factor resampling re-headers at the reduced rate."""
@@ -440,34 +396,6 @@ def test_containment_threshold_is_exact_rational(spark):
     assert (0, 1) in got and got[(0, 1)] == 0.8
 
 
-def test_containment_collapse_identical_is_plan_only(spark):
-    """collapse_identical must not change the output on a corpus heavy
-    with exact duplicates (within-group pairs at exactly 1.0, cross
-    pairs inheriting the rep division verbatim)."""
-    from event_data_etl_gcs_spark.operators.dedup import containment_pairs
-
-    base = [
-        (0, "a b c d e f g"),
-        (1, "a b c d e f g"),      # exact dup of 0
-        (2, "a b c d e f g"),      # exact dup of 0
-        (3, "a b c d e f zzz yyy xxx"),  # contains most of 0
-        (4, "q w e r t y u"),
-        (5, "u y t r e w q"),      # same tokens, different shingles
-    ]
-    df = spark.createDataFrame(base, "doc_id long, text string")
-
-    def rows(collapse):
-        return sorted(
-            (r["id_a"], r["id_b"], r["containment"])
-            for r in containment_pairs(
-                df, collapse_identical=collapse
-            ).collect()
-        )
-
-    on, off = rows(True), rows(False)
-    assert on == off and len(on) >= 8  # 3-dup group alone yields 6 pairs
-
-
 def test_containment_keep_policy_drops_contained_doc(spark):
     """Keep-the-container policy: the embedded (smaller) doc is dropped,
     the container and unrelated docs survive; equal sets keep min id."""
@@ -491,43 +419,3 @@ def test_containment_keep_policy_drops_contained_doc(spark):
         for r in get_query("dedup_containment_keep").fn(spark, d).collect()
     }
     assert got == {2, 3}
-
-
-def test_containment_incremental_union_equals_batch(spark):
-    """Union of incremental containment emissions over ANY batch split
-    equals the full-corpus build — exactness holds with frozen
-    at-arrival prefixes (prefix filtering is correct for any
-    valid-size subset, so the probe prefix never needs recomputing as
-    the corpus grows)."""
-    from pyspark.sql import functions as F
-
-    from event_data_etl_gcs_spark.operators.dedup import (
-        containment_incremental_pairs,
-        containment_pairs,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    want = sorted(
-        (r["id_a"], r["id_b"], r["containment"])
-        for r in containment_pairs(docs).collect()
-    )
-    assert want
-
-    sets = spark.createDataFrame([], "id LONG, s ARRAY<BIGINT>")
-    prefix = spark.createDataFrame([], "id LONG, h BIGINT")
-    got = []
-    for m in range(3):
-        batch = docs.filter(F.col("doc_id") % 3 == m)
-        pairs, new_sets, new_prefix = containment_incremental_pairs(
-            batch, sets, prefix
-        )
-        got.extend(
-            (r["id_a"], r["id_b"], r["containment"]) for r in pairs.collect()
-        )
-        # the caller's state append, materialized (in the streaming
-        # loop these are parquet appends)
-        sets = sets.unionByName(new_sets).localCheckpoint(eager=True)
-        prefix = prefix.unionByName(new_prefix).localCheckpoint(eager=True)
-
-    assert sorted(got) == want
-    assert len(got) == len(set(got)), "each ordered pair emitted once"
